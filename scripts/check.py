@@ -50,8 +50,14 @@ for name in sorted(os.listdir(out_dir)):
             status = ["OK"]
     results[name] = "; ".join(status)
 
+# a query that threw in Verify leaves no output dir: that is a failure,
+# not a query to skip
+for name in oracle:
+    if name not in results:
+        results[name] = "MISSING: no output dir (the query threw in Verify)"
+
 fails = 0
-for k, v in results.items():
+for k, v in sorted(results.items()):
     mark = "PASS" if v == "OK" else ("----" if v.startswith("NO-ORACLE") else "FAIL")
     if mark == "FAIL":
         fails += 1

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -41,28 +39,11 @@ object Bench {
     val t0Main = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - t0Main) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // Shuffle-partition count sized for the benchmark data scale (AQE
     // coalesces further at runtime); on a cluster this scales with the
     // input, not the core count.
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8")
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", aqe)
-      // Typed-accumulator aggregates (simhash, top-k) run in
-      // ObjectHashAggregate; the default 128-group fallback would
-      // switch them to sort-based almost immediately. Buffers are
-      // O(100 B)/group, so a millions-size hash map is the right trade.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val spark = GraftSession.build(cpus, shufflePartitions = 8)
 
     def r3(x: Double) = math.round(x * 1000) / 1000.0
 
@@ -279,13 +260,13 @@ object Bench {
     var calibrated = false
     def calibrate(): Double = {
       if (!calibrated) {
-        spark.range(0L, 200000000L, 1L, cpus.toInt)
+        spark.range(0L, 200000000L, 1L, cpus)
           .selectExpr("max(xxhash64(id))").head()
         calibrated = true
       }
       val t = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        spark.range(0L, 200000000L, 1L, cpus.toInt)
+        spark.range(0L, 200000000L, 1L, cpus)
           .selectExpr("max(xxhash64(id))").head()
         (System.nanoTime() - t0) / 1e9
       }
@@ -320,7 +301,7 @@ object Bench {
       // mismatch does; the cpus adoption leg below still keeps the
       // run from overwriting the canonical.
       val cp = if (!prevProbe.contains(probeVersion) ||
-          pc.exists(_ != cpus.toInt)) None
+          pc.exists(_ != cpus)) None
       else """"calibration":\{"probe":"v[0-9]+","start":([0-9.eE+-]+),"end":([0-9.eE+-]+)""".r
         .findFirstMatchIn(txt)
         .map(m => math.min(m.group(1).toDouble, m.group(2).toDouble))
@@ -368,7 +349,7 @@ object Bench {
     // honest artifact — just not the prior). Legacy priors without a
     // "cpus" stamp can't be checked; they adopt normally and the new
     // artifact stamps its own.
-    if (outFile == "bench.json" && prevCpus.exists(_ != cpus.toInt)) {
+    if (outFile == "bench.json" && prevCpus.exists(_ != cpus)) {
       redirectOut(s"bench_c$cpus.json")
       System.err.println(s"[bench] core count $cpus != armed prior's " +
         s"${prevCpus.get} — writing to bench_c$cpus.json, leaving the " +
@@ -393,7 +374,7 @@ object Bench {
     val BlockProbeEvery = 25
     def probeOnce(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 200000000L, 1L, cpus.toInt)
+      spark.range(0L, 200000000L, 1L, cpus)
         .selectExpr("max(xxhash64(id))").head()
       (System.nanoTime() - t0) / 1e9
     }
@@ -451,7 +432,7 @@ object Bench {
       // the prior is stamped — the same core count (8-core prices are
       // not regression priors for a 32-core run)
       val prevSf = """"sf":"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
-      if (!prevSf.contains(sfDir) || prevCpus.exists(_ != cpus.toInt)) Map.empty
+      if (!prevSf.contains(sfDir) || prevCpus.exists(_ != cpus)) Map.empty
       else """"queries":\{(.*?)\}""".r.findFirstMatchIn(txt).map(_.group(1))
         .map { qm =>
           """"([^"]+)":(-?[0-9][0-9.eE+-]*)""".r.findAllMatchIn(qm)

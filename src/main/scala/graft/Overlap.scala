@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.{Callable, ExecutionException, Future}
+
 /** Driver-side overlap of INDEPENDENT Spark actions (guide §2.6:
   * actions are only sequential because driver code calls them
   * sequentially — submitting independent jobs from a small pool lets
@@ -14,10 +16,12 @@ package graft
   *    the same map (publish-once builds run INSIDE cached(...)) can
   *    deadlock through the caller's get() — every call site resolves
   *    memoized frames on the calling thread first;
-  *  - exceptions propagate: get() rethrows (wrapped), so a failed
+  *  - exceptions propagate: every thunk is awaited, even when an
+  *    earlier one threw, before the first failure in argument order
+  *    is rethrown (a pool thunk's wrapped by get()), so a failed
   *    write still fails the batch/build exactly as the sequential
-  *    code did — both thunks are awaited before anything after the
-  *    call runs (the crash-injection contracts depend on that);
+  *    code did and nothing after the call runs while a sibling is
+  *    still writing (the crash-injection contracts depend on that);
   *  - threads are daemons and pooled; job groups/descriptions are
   *    thread-local in Spark, so overlapped jobs simply carry the
   *    default description.
@@ -30,24 +34,28 @@ object Overlap {
       t
     })
 
+  private def submit[T](t: => T): Future[T] = pool.submit(new Callable[T] {
+    def call(): T = t
+  })
+
+  /** Wait for `f` to finish; its failure is rethrown by the caller's own
+    * `get()` once every earlier thunk has succeeded.
+    */
+  private def await(f: Future[_]): Unit =
+    try f.get() catch { case _: ExecutionException => () }
+
   /** Run `a` on the calling thread and `b` on the pool, return both. */
   def par[A, B](a: => A, b: => B): (A, B) = {
-    val fb = pool.submit(new java.util.concurrent.Callable[B] {
-      def call(): B = b
-    })
-    val ra = a
+    val fb = submit(b)
+    val ra = try a finally await(fb)
     (ra, fb.get())
   }
 
   /** Run `a` on the calling thread, `b` and `c` on the pool. */
   def par3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
-    val fb = pool.submit(new java.util.concurrent.Callable[B] {
-      def call(): B = b
-    })
-    val fc = pool.submit(new java.util.concurrent.Callable[C] {
-      def call(): C = c
-    })
-    val ra = a
+    val fb = submit(b)
+    val fc = submit(c)
+    val ra = try a finally { await(fb); await(fc) }
     (ra, fb.get(), fc.get())
   }
 }

@@ -94,11 +94,11 @@ object Stress {
     ratio
   }
 
-  /** Round-17 suffixSpansOf, inlined verbatim as the `suffiximpl`
-    * A/B's reference arm (measurement harness only — the packed-id
-    * assert_true guards are elided, they cost nothing either way):
-    * groupBy+join-back per class collapse, string seed keys,
-    * localCheckpoints on every dual-consumed frame.
+  /** Round-17 suffixSpansOf, kept verbatim as the reference
+    * implementation `SuffixImplSpec` pins the current one against (the
+    * packed-id assert_true guards are elided): groupBy+join-back per
+    * class collapse, string seed keys, localCheckpoints on every
+    * dual-consumed frame.
     */
   private[graft] def legacySuffixSpansOf(documents: DataFrame, spanL: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -145,11 +145,11 @@ object Stress {
         (col("s1") - col("s0") + spanL).cast("long").as("span_len"))
   }
 
-  /** Round-17 suffixCleanOf, inlined verbatim as the `suffiximpl clean`
-    * A/B's reference arm: raw span strings through the winner
+  /** Round-17 suffixCleanOf, kept verbatim as `SuffixImplSpec`'s
+    * reference implementation: raw span strings through the winner
     * aggregate + cut join, the per-covered-char explode census, and
     * the running-concat reassembly fold — feeding from
-    * [[legacySuffixSpansOf]] so the arm is the full r17 row shape.
+    * [[legacySuffixSpansOf]] so it is the full r17 row shape.
     */
   private[graft] def legacySuffixCleanOf(documents: DataFrame, spanL: Int): DataFrame = {
     val pk = 1048576L
@@ -198,46 +198,6 @@ object Stress {
         md5(col("ct")).as("clean_fp"))
   }
 
-  /** Round-17 dd_cdc_chunks, inlined verbatim as the `cdcab` A/B's
-    * reference arm: one exploded row per character position, window
-    * substring re-hashed per row (each substring walks the UTF8 bytes
-    * from offset 0 — O(len²) per doc), boundary lists re-attached
-    * through a collect_list aggregate + doc-keyed join.
-    */
-  private[graft] def legacyCdcChunks(documents: DataFrame): DataFrame = {
-    import graft.functions.RollingHash.rolling_hash
-    import graft.operators.Dedup.{CdcMask, CdcMinChunk, CdcWindow}
-    val d = documents
-      .filter(length(col("text")) >= 1)
-      .select(col("doc_id"), col("text"), length(col("text")).as("len"))
-    val bounds = d.filter(col("len") >= CdcWindow)
-      .select(col("doc_id"), col("text"),
-        explode(sequence(lit(CdcWindow), col("len"))).as("i"))
-      .withColumn("wh",
-        rolling_hash(expr(s"substring(text, i - ${CdcWindow - 1}, $CdcWindow)")))
-      .filter(col("wh").bitwiseAND(lit(CdcMask)) === 0)
-      .groupBy("doc_id").agg(collect_list(col("i")).as("bs"))
-    val chunks = d.join(bounds, Seq("doc_id"), "left")
-      .withColumn("cuts", array_sort(array_distinct(concat(
-        array(lit(0)), coalesce(col("bs"), array().cast("array<int>")),
-        array(col("len"))))))
-      .select(col("doc_id"), col("text"),
-        explode(expr(
-          "transform(sequence(0, size(cuts) - 2), " +
-            "k -> struct(cuts[k] AS st, cuts[k + 1] AS en))")).as("ck"))
-      .select(col("doc_id"),
-        expr("substring(text, ck.st + 1, ck.en - ck.st)").as("chunk"))
-    chunks
-      .select(col("doc_id"), md5(col("chunk")).as("chunk_md5"),
-        length(col("chunk")).as("chunk_len"))
-      .filter(col("chunk_len") >= CdcMinChunk)
-      .groupBy("chunk_md5", "chunk_len")
-      .agg(countDistinct(col("doc_id")).as("n_docs"), count(lit(1)).as("n_occ"))
-      .filter(col("n_docs") >= 2)
-      .orderBy(col("n_docs").desc, col("n_occ").desc, col("chunk_md5").asc)
-      .limit(50)
-  }
-
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("suffix")) {
       // dd_suffix_spans log-round scaling probe (round-13 verdict #3):
@@ -245,15 +205,7 @@ object Stress {
       // class-doubling round, so wall-clock should step roughly
       // linearly in log2(L), not in L. Usage:
       //   runMain graft.Stress suffix [sfDir] [L ...]
-      val spark = SparkSession.builder().master("local[32]")
-        .appName("graft-stress-suffix")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.build(32, shufflePartitions = 8)
       try {
         val rest = args.drop(1)
         val dir = rest.headOption.getOrElse("/root/testdata/sf0.1")
@@ -276,167 +228,6 @@ object Stress {
       } finally spark.stop()
       return
     }
-    if (args.headOption.contains("suffixab")) {
-      // Seed-base A/B for suffixSpansOf (round 14): the same L timed
-      // with two seed gram widths, interleaved ABBA-BAAB inside one
-      // JVM so the monotone in-session drift (pending-GC checkpoint
-      // blocks from earlier legs pressure later ones) cancels between
-      // arms instead of biasing whichever ran last. Report = per-arm
-      // min (the bench's min-of-N convention — least-interfered leg).
-      // Usage: runMain graft.Stress suffixab [sfDir] [L] [baseA] [baseB]
-      val spark = SparkSession.builder().master("local[32]")
-        .appName("graft-stress-suffixab")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      try {
-        val rest = args.drop(1)
-        val dir = rest.headOption.getOrElse("/root/testdata/sf0.1")
-        val l = rest.drop(1).headOption.map(_.toInt).getOrElse(32)
-        val bA = rest.drop(2).headOption.map(_.toInt).getOrElse(4)
-        val bB = rest.drop(3).headOption.map(_.toInt).getOrElse(8)
-        val docs = Tables.load(spark, dir, "documents")
-        docs.count() // warm-up: scan + codegen outside the timings
-        def leg(b: Int): (Long, Double) = {
-          val t0 = System.nanoTime()
-          val spans = graft.operators.Dedup.suffixSpansOf(docs, l, b).count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          println(f"STRESS suffix_ab dir=$dir L=$l base=$b spans=$spans " +
-            f"time=$sec%.2f")
-          (spans, sec)
-        }
-        // per-arm min of interleaved legs: leg times on this host vary
-        // up to 5× from outside interference (forcing a GC between
-        // legs does NOT stabilize them — measured, SCALE.md round 14),
-        // so the min is the only comparable statistic, and alternation
-        // keeps slow phases from landing all in one arm
-        val order = Seq(bA, bB, bB, bA, bB, bA, bA, bB)
-        val times = order.map(b => b -> leg(b))
-        // exactness across bases is the PREMISE of the A/B (the seed
-        // base may change cost, never output) — assert it before
-        // printing a timing comparison that would otherwise compare
-        // two different computations
-        val spanCounts = times.map(_._2._1).distinct
-        require(spanCounts.size == 1,
-          s"seed bases produced different span counts: " +
-            times.map { case (b, (sp, _)) => s"base$b=$sp" }.distinct
-              .mkString(", "))
-        val minA = times.filter(_._1 == bA).map(_._2._2).min
-        val minB = times.filter(_._1 == bB).map(_._2._2).min
-        println(f"STRESS suffix_ab_summary L=$l base$bA=$minA%.2f " +
-          f"base$bB=$minB%.2f spans=${spanCounts.head} " +
-          "(per-arm min of 4 interleaved legs; span equality asserted)")
-      } finally spark.stop()
-      return
-    }
-    if (args.headOption.contains("suffiximpl")) {
-      // Implementation A/B for the round-18 suffixSpansOf rewrite
-      // (window-min class collapse over fp128 seed keys, checkpoints
-      // dropped) vs the round-17 shape (groupBy+join-back per
-      // collapse, per-round localCheckpoints), interleaved
-      // ABBA-BAAB in one JVM like suffixab. The legacy arm is inlined
-      // HERE (measurement harness, not product code) verbatim from
-      // the r17 tree; row-level span-set equality is asserted every
-      // leg pair — the exactness premise of the timing comparison.
-      // Usage: runMain graft.Stress suffiximpl [sfDir] [L]
-      val spark = SparkSession.builder().master("local[32]")
-        .appName("graft-stress-suffiximpl")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      try {
-        val rest = args.drop(1)
-        val dir = rest.headOption.getOrElse("/root/testdata/sf0.1")
-        val l = rest.drop(1).headOption.map(_.toInt).getOrElse(32)
-        val target = rest.drop(2).headOption.getOrElse("spans")
-        val docs = Tables.load(spark, dir, "documents")
-        docs.count() // warm-up outside the timings
-        def newDf() =
-          if (target == "clean") graft.operators.Dedup.suffixCleanOf(docs, l)
-          else graft.operators.Dedup.suffixSpansOf(docs, l)
-        def oldDf() =
-          if (target == "clean") legacySuffixCleanOf(docs, l)
-          else legacySuffixSpansOf(docs, l)
-        def leg(arm: String): (Long, Double) = {
-          val t0 = System.nanoTime()
-          val n = (if (arm == "new") newDf() else oldDf()).count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          println(f"STRESS suffix_impl dir=$dir L=$l target=$target arm=$arm " +
-            f"rows=$n time=$sec%.2f")
-          (n, sec)
-        }
-        // exactness first, once: full row-set equality (not just
-        // counts) between the two arms
-        val diff = newDf().exceptAll(oldDf()).count() +
-          oldDf().exceptAll(newDf()).count()
-        require(diff == 0, s"row sets differ between arms: $diff rows")
-        println(s"STRESS suffix_impl_equality L=$l target=$target rows_differ=0")
-        val order = Seq("old", "new", "new", "old", "new", "old", "old", "new")
-        val times = order.map(a => a -> leg(a))
-        val counts = times.map(_._2._1).distinct
-        require(counts.size == 1, "arms produced different row counts")
-        val minOld = times.filter(_._1 == "old").map(_._2._2).min
-        val minNew = times.filter(_._1 == "new").map(_._2._2).min
-        println(f"STRESS suffix_impl_summary L=$l target=$target " +
-          f"old=$minOld%.2f new=$minNew%.2f speedup=${minOld / minNew}%.2fx " +
-          f"rows=${counts.head} " +
-          "(per-arm min of 4 interleaved legs; row-set equality asserted)")
-      } finally spark.stop()
-      return
-    }
-    if (args.headOption.contains("cdcab")) {
-      // Implementation A/B for the round-18 dd_cdc_chunks rewrite
-      // (one-pass CdcChunks expression, no boundary aggregate or
-      // join) vs the round-17 shape (per-position explode + substring
-      // re-hash + collect_list + doc join), interleaved ABBA-BAAB in
-      // one JVM; full 50-row result equality asserted first — the
-      // exactness premise of the timing comparison.
-      // Usage: runMain graft.Stress cdcab [sfDir]
-      val spark = SparkSession.builder().master("local[32]")
-        .appName("graft-stress-cdcab")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      try {
-        val dir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-        val docs = Tables.load(spark, dir, "documents")
-        docs.count() // warm-up outside the timings
-        def newDf() = SparkEntry.queries("dd_cdc_chunks")(spark, dir)
-        def oldDf() = legacyCdcChunks(docs)
-        val newRows = newDf().collect().toSeq
-        val oldRows = oldDf().collect().toSeq
-        require(newRows == oldRows,
-          s"arms differ: new=${newRows.take(2)} old=${oldRows.take(2)}")
-        println(s"STRESS cdc_ab_equality rows=${newRows.size} rows_differ=0")
-        def leg(arm: String): (Long, Double) = {
-          val t0 = System.nanoTime()
-          val n = (if (arm == "new") newDf() else oldDf()).count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          println(f"STRESS cdc_ab dir=$dir arm=$arm rows=$n time=$sec%.2f")
-          (n, sec)
-        }
-        val order = Seq("old", "new", "new", "old", "new", "old", "old", "new")
-        val times = order.map(a => a -> leg(a))
-        val minOld = times.filter(_._1 == "old").map(_._2._2).min
-        val minNew = times.filter(_._1 == "new").map(_._2._2).min
-        println(f"STRESS cdc_ab_summary old=$minOld%.2f new=$minNew%.2f " +
-          f"speedup=${minOld / minNew}%.2fx " +
-          "(per-arm min of 4 interleaved legs; full result equality asserted)")
-      } finally spark.stop()
-      return
-    }
     if (args.headOption.contains("ivfskew")) {
       // Fat-cell fixture for the IVF rebalance path (round 14): a
       // synthetic corpus whose coarse quantizer provably concentrates
@@ -452,15 +243,7 @@ object Stress {
       // the operator comment: the split touches one cell's rows, so a
       // fat cell costs what the fat cell holds, nothing quadratic).
       // Usage: runMain graft.Stress ivfskew [n]
-      val spark = SparkSession.builder().master("local[32]")
-        .appName("graft-stress-ivfskew")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.build(32, shufflePartitions = 32)
       try {
         val n = args.drop(1).headOption.map(_.toLong).getOrElse(50000L)
         require(n < 1000000L, "n must stay below the delta re-key offset")
@@ -555,15 +338,7 @@ object Stress {
       // into shared pad suffixes/prefixes and merge with the boiler
       // island; pads are unique) — expected spans == g exactly.
       // Usage: runMain graft.Stress suffixskew [g]
-      val spark = SparkSession.builder().master("local[32]")
-        .appName("graft-stress-suffixskew")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.build(32, shufflePartitions = 32)
       try {
         val g = args.drop(1).headOption.map(_.toLong).getOrElse(100000L)
         val boiler = "THE SAME 32-CHAR BOILERPLATE RUN"
@@ -596,15 +371,7 @@ object Stress {
       // local[8] at a 2 GB heap = 256 MB per concurrent task — harsher
       // than any sane production sizing (local[32] would grant 64 MB a
       // task, a config no 100 TB cluster runs)
-      val spark = SparkSession.builder().master("local[8]")
-        .appName("graft-stress-pairgen")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.build(8, shufflePartitions = 32)
       try pairgenStress(spark, args.drop(1).headOption.map(_.toLong).getOrElse(100000L))
       finally spark.stop()
       return
@@ -615,14 +382,7 @@ object Stress {
       // unlike trivially-repetitive filler) — measures the MB/s/core
       // SCALE.md prices the ta_compress_ratio pass at, instead of
       // guessing it.
-      val spark = SparkSession.builder().master("local[8]")
-        .appName("graft-stress-compress")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.build(8, shufflePartitions = 8)
       try {
         val nDocs = args.drop(1).headOption.map(_.toLong).getOrElse(20000L)
         val dir = java.nio.file.Files.createTempDirectory("graft_compress").toString
@@ -649,14 +409,7 @@ object Stress {
       // large-star/small-star body must finish in tens of rounds
       // (O(log² n)), labeling every node with the path minimum 0 —
       // so count must be n and sum(label) must be 0.
-      val spark = SparkSession.builder().master("local[8]")
-        .appName("graft-stress-ccchain")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.build(8, shufflePartitions = 16)
       try {
         val n = args.drop(1).headOption.map(_.toLong).getOrElse(10000L)
         val pairs = spark.range(0, n - 1)
@@ -680,15 +433,7 @@ object Stress {
       // compare the auto-shifted result against the exact one and
       // demand ppm-level agreement — the branch is exercised at a doc
       // count that FORCES it, not simulated with an override.
-      val spark = SparkSession.builder().master("local[32]")
-        .appName("graft-stress-ariscale")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.build(32, shufflePartitions = 32)
       try {
         val n = args.drop(1).headOption.map(_.toLong).getOrElse(40000000L)
         // clusters of 10; every 100th doc defects to a singleton in
@@ -735,16 +480,7 @@ object Stress {
       // under maximal span merging; ratios are read with that regime
       // in mind (SCALE.md round 16).
       //   Usage: runMain graft.Stress sf1 [query ...]
-      val spark = SparkSession.builder().master("local[32]")
-        .appName("graft-stress-sf1")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.build(32, shufflePartitions = 32)
       try {
         val src = "/root/testdata/sf0.1"
         val f = 10
@@ -793,14 +529,7 @@ object Stress {
       // Standalone rerun of the AsOfJoinExec skew probes (the full-mode
       // block below) so each round can refresh SCALE.md's measured skew
       // rows without the 20× corpus amplification run.
-      val spark = SparkSession.builder().master("local[32]")
-        .appName("graft-stress-asof")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.build(32, shufflePartitions = 32)
       try {
         val nLeft = 4000000L
         val nRight = 100000L
@@ -864,15 +593,7 @@ object Stress {
       // trained-IVF edge build must hold α ≈ 1.5 (edge volume
       // O(n^1.5)), nowhere near the all-pairs α = 2 with β following
       // edges, not pairs².
-      val spark = SparkSession.builder().master("local[32]")
-        .appName("graft-stress-curve")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.build(32, shufflePartitions = 32)
       val src = "/root/testdata/sf0.1"
       // `Stress curve [f1,f2,...] [names...]` — default sweep keeps
       // the round-9 exact-audit trio at 1/5/20/50; the round-11 heavy
@@ -1032,15 +753,7 @@ object Stress {
         "dd_cluster_weakest_link", "pipe_rebalance_plan")
     val src = "/root/testdata/sf0.1"
     val dst = java.nio.file.Files.createTempDirectory("graft_stress").toString
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("graft-stress")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(32, shufflePartitions = 32)
 
     def amplify(name: String, idCols: Seq[String]): Unit = {
       val base = Tables.load(spark, src, name)

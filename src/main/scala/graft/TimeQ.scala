@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev utility: warm + timed run of selected queries on a given sf dir
   * (`runMain graft.TimeQ <sfDir> <query>...`) — the per-query feedback
   * loop between full Bench runs.
@@ -7,14 +6,7 @@ import org.apache.spark.sql.SparkSession
 object TimeQ {
   def main(args: Array[String]): Unit = {
     val dir = args.head
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val spark = GraftSession.build(32, shufflePartitions = 8)
     args.drop(1).foreach { q =>
       SparkEntry.queries(q)(spark, dir).count() // warm
       val t0 = System.nanoTime()

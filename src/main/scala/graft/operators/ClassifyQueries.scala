@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Registry, Tables}
 import graft.functions.Log2Micro
 import graft.operators.TextOps.tokens
 
@@ -61,7 +61,7 @@ object ClassifyQueries {
     (counts, langs)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Registry.of(
 
     // k-NN CLASSIFICATION over the labeled embeddings — the
     // non-parametric counterpart to the NB/LR rows and THE standard
@@ -275,7 +275,7 @@ object ClassifyQueries {
        |  CROSS JOIN vv)""".stripMargin
   }
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Registry.of(
 
     // rides the shared trained-√n-cell kNN chain; vote argmax =
     // max-count then min-label, mirrored token for token

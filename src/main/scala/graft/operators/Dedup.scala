@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Registry, Tables}
 import TextOps._
 
 /** Deduplication operators for an LLM data pipeline, each with a
@@ -250,7 +250,7 @@ object Dedup {
         (col("eq").cast("double") / OphBuckets).as("est_jaccard"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Registry.of(
 
     // Exact dedup: one hash-shuffle; min(doc_id) is the deterministic
     // survivor ("keep first").
@@ -1681,9 +1681,9 @@ object Dedup {
   /** Seed gram width for [[suffixSpansOf]]'s prefix doubling: classes
     * enter the loop at base-char granularity, so rounds =
     * log₂(L/base). Power of two; every supported L must satisfy
-    * L ≥ 2·base (the auto default clamps to spanL/2 for smaller L).
-    * Round 17: 8 → 16, A/B-measured with `graft.Stress suffixab
-    * sf0.1 32 8 16` (interleaved, span equality asserted): per-arm
+    * L ≥ 2·base ([[suffixSpansOf]] clamps it to spanL/2 for smaller
+    * L). Round 17: 8 → 16, A/B-measured at sf0.1, L = 32
+    * (interleaved, span equality asserted; SCALE.md round 17): per-arm
     * min 9.70 s (base 8, two doubling rounds) vs 8.45 s (base 16,
     * ONE round) — one fewer round (a window + two corpus-position
     * shuffles) beats the wider 16-char seed keys in the one seed
@@ -1763,24 +1763,15 @@ object Dedup {
     * scaling directly. See the query's comment for the algorithm and
     * exactness argument.
     */
-  private[graft] def suffixSpansOf(documents: DataFrame, spanL: Int,
-      base: Int = 0): DataFrame = {
-    // base 0 = auto: the measured-best [[SuffixSeedBase]], clamped to
-    // spanL/2 so CLI sweeps at small L keep a valid power-of-two seed
-    val seedBase = if (base > 0) base else math.min(SuffixSeedBase, spanL / 2)
+  private[graft] def suffixSpansOf(documents: DataFrame, spanL: Int): DataFrame = {
+    // the measured-best [[SuffixSeedBase]], clamped to spanL/2 so CLI
+    // sweeps at small L keep a valid power-of-two seed
+    val seedBase = math.min(SuffixSeedBase, spanL / 2)
     // seedBase-char classes seed the loop (one short-string aggregate
     // beats extra long-key rounds; the doubling structure — and its
     // log₂ cost curve — is unchanged, just entered log₂(seedBase)
     // levels up; base 4 vs 8 A/B-measured in SCALE.md round 14, 8 vs
-    // 16 in round 17, via `graft.Stress suffixab`). The base
-    // parameter exists for that A/B harness only; queries use the
-    // auto default. seedBase must itself be a power of two: the
-    // doubling loop steps w = seedBase, 2·seedBase, 4·seedBase … and
-    // exits at w == spanL only when spanL/seedBase is a power of two
-    // — a non-power base (reachable via the suffixab CLI) would
-    // overshoot spanL and silently return classes wider than L.
-    require(seedBase >= 1 && (seedBase & (seedBase - 1)) == 0,
-      s"seed base must be a power of two >= 1, got $seedBase")
+    // 16 in round 17)
     require(spanL >= 2 * seedBase && (spanL & (spanL - 1)) == 0,
       s"spanL must be a power of two >= ${2 * seedBase}, got $spanL")
     import org.apache.spark.sql.expressions.Window
@@ -2447,7 +2438,7 @@ object Dedup {
        |       ELSE 'kept' END AS status
        |FROM newd n ORDER BY n.doc_id""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Registry.of(
     "dd_exact" ->
       """SELECT md5(text) AS fp, count(*) AS n_docs, min(doc_id) AS keep_id
         |FROM documents GROUP BY 1 ORDER BY fp""".stripMargin,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.Tables
+import graft.{Registry, Tables}
 
 /** Pairs → clusters: the last stage of a real dedup pipeline. Verified
   * near-dup pairs (LSH → exact-Jaccard, [[Dedup]]) form an undirected
@@ -273,7 +273,7 @@ object DedupClusters {
       .select("n_docs", "s_ij", "s_a", "s_b", "rand_ppm", "ari_ppm")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Registry.of(
 
     // DBSCAN over the embedding space — density clustering, the
     // noise-aware counterpart of the k-means family (clusters of any
@@ -804,7 +804,7 @@ object DedupClusters {
        |  JOIN sz$r ts ON ts.c = b.c
        |  JOIN sz$r os ON os.c = cur.comm)""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Registry.of(
 
     "dd_cluster_weakest_link" ->
       s"""WITH RECURSIVE pairs AS MATERIALIZED (${Dedup.ngramJaccardPairsSql}),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Registry, Tables}
 
 /** Batch event analytics over the `events` table: tumbling time
   * windows, JSON property extraction, gap-based sessionization. These
@@ -344,7 +344,7 @@ object EventQueries {
       .orderBy("conc")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Registry.of(
 
     // RFM SEGMENTATION — the classic customer-value operator (recency /
     // frequency / monetary, Hughes 1994): per user, days since last
@@ -2542,7 +2542,7 @@ object EventQueries {
   /** Bootstrap replica count (ev_bootstrap_ci). */
   val BootReplicas = 32
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Registry.of(
     "ev_new_vs_returning" ->
       """WITH du AS (
         |  SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events),

@@ -333,7 +333,7 @@ object GraphQueries {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = graft.Registry.of(
 
     "dd_pagerank" -> ((s, dir) =>
       pageRankMicro(
@@ -493,7 +493,7 @@ object GraphQueries {
        |  JOIN k$round a ON e.src = a.id
        |  JOIN k$round b ON e.dst = b.id)""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = graft.Registry.of(
     "dd_kcore" ->
       s"""WITH pairs AS MATERIALIZED (${Dedup.ngramJaccardPairsSql}),
          |e0 AS MATERIALIZED (

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Registry, Tables}
 import graft.functions.{PgmCodec, WavCodec}
 
 /** Multimodal-column plumbing: media treated as opaque `binary`
@@ -386,7 +386,7 @@ object Multimodal {
         md5(col("dec_pixels")).as("pixels_md5"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Registry.of(
 
     // REAL BINARY FILES end-to-end (round-9 mandate): every other mm_*
     // row wraps text bytes into a valid container AT QUERY TIME; this
@@ -1550,7 +1550,7 @@ object Multimodal {
       |      AND a.doc_id < b.doc_id)
       |WHERE hamming <= 3""".stripMargin
 
-  private val staticOracleSql: Map[String, String] = Map(
+  private val staticOracleSql: Map[String, String] = Registry.of(
     "mm_meta" ->
       """SELECT doc_id,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
@@ -2304,7 +2304,8 @@ object Multimodal {
     * documents table. DuckDB's `read_parquet` takes the absolute
     * path; everything else stays on the bare table views.
     */
-  def oracleSql: Map[String, String] = staticOracleSql + ("mm_decode_jpeg" ->
+  def oracleSql: Map[String, String] = Registry.merge(staticOracleSql, Registry.of(
+    "mm_decode_jpeg" ->
     s"""WITH sc AS (SELECT * FROM read_parquet('${jpegSidecar.get()}/*.parquet')),
        |sub AS (SELECT doc_id, greatest(1, (length(text) + 7) // 8) AS h
        |        FROM documents WHERE $PngSubsetPredSql)
@@ -2312,7 +2313,8 @@ object Multimodal {
        |  CAST(d.h AS INT) AS height, sc.sum_abs_err, sc.max_abs_err,
        |  sc.pixels_md5
        |FROM sub d JOIN sc ON sc.doc_id = d.doc_id
-       |ORDER BY d.doc_id""".stripMargin) + ("mm_png_chunks" -> {
+       |ORDER BY d.doc_id""".stripMargin,
+    "mm_png_chunks" -> {
     // fully independent re-walk of the SAME landing files: read_blob
     // + a recursive CTE over the hex string (DuckDB's blob type has
     // no byte slicing; hex + positional nibble decode does — big-
@@ -2346,5 +2348,5 @@ object Multimodal {
        |SELECT doc_id, n_bytes, n_chunks, n_idat, idat_bytes,
        |  w AS width, h AS height
        |FROM walk WHERE done ORDER BY doc_id""".stripMargin
-  })
+  }))
 }

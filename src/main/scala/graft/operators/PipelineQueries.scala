@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Registry, Tables}
 import TextOps._
 
 /** Composed pipeline queries — the shapes a real training-data pipeline
@@ -86,7 +86,7 @@ object PipelineQueries {
   val EmailRe = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]+"
   val PhoneRe = "[0-9]{3}-[0-9]{4}"
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Registry.of(
 
     // PII SCAN + REDACTION — the C4/RefinedWeb-style scrubbing pass
     // every public-web training corpus runs before release. The
@@ -1455,7 +1455,7 @@ object PipelineQueries {
       |      END) AS v
       |    FROM j))""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Registry.of(
     "pipe_mix_temperature" ->
       s"""WITH RECURSIVE tl AS (
          |  SELECT lang, CAST(sum(len($toksSql)) AS BIGINT) AS n_tokens

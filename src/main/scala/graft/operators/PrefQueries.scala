@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Registry, Tables}
 
 /** Preference-ranking operators — the pairwise-comparison shape at the
   * heart of preference-tuning data pipelines (which response won, how
@@ -103,7 +103,7 @@ object PrefQueries {
 
   val BtIters = 8
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Registry.of(
 
     // PAIRWISE PREFERENCE MATRIX — the raw artifact a preference
     // pipeline materializes before any model fit: for every unordered
@@ -184,7 +184,7 @@ object PrefQueries {
        |  FROM p$r p)""".stripMargin
   }
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Registry.of(
 
     "ev_pref_matrix" ->
       s"""WITH $duelCtes

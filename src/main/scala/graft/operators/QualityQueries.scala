@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Registry, Tables}
 import graft.functions.Log2Micro
 import TextOps._
 
@@ -161,7 +161,7 @@ object QualityQueries {
        |  FROM sp)""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Registry.of(
 
     // Per-language quality report of the three-rule Gopher gate. One
     // narrow pass computes all signals from the token array (no
@@ -510,7 +510,7 @@ object QualityQueries {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Registry.of(
     "pipe_quality_gopher" ->
       s"""WITH base AS (
          |  SELECT lang,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Registry, Tables}
 
 /** EXACT distributed order statistics without a global sort — the two
   * scale patterns for "give me the real median/p90, not a sketch"
@@ -162,7 +162,7 @@ object QuantileQueries {
     (literal.toSeq ++ ranked.toSeq).reduce(_ union _).orderBy("stat")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Registry.of(
 
     // Exact median and p90 of a 6M-row (→ 100 TB) double column via
     // adaptive refinement; ties are harmless (the k-th VALUE of a
@@ -278,7 +278,7 @@ object QuantileQueries {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Registry.of(
     "q_exact_quantiles" ->
       """WITH ranked AS (
         |  SELECT l_extendedprice AS v,

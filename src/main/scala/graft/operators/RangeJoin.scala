@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Registry, Tables}
 
 /** Interval (range) join without an equi-key — the classic operator
   * Spark lacks natively. A raw `ts >= start AND ts < end` join has no
@@ -101,7 +101,7 @@ object RangeJoin {
       .drop("_cellx", "_celly")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Registry.of(
     // Event density around anchor events: the first 40 events open
     // 2-hour windows; count the events and distinct users inside each.
     // Both join sides are the events table — the large×large shape
@@ -178,7 +178,7 @@ object RangeJoin {
   private def hex13Of(e: String): String =
     OracleSql.hexLong(s"md5($e)", 1, 13)
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Registry.of(
     // The oracle states the semantics directly as an inequality join.
     "ev_range_join" ->
       """WITH iv AS (

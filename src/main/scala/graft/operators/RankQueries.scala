@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Registry, Tables}
 import TextOps._
 
 /** Retrieval-ranking operators: BM25 keyword scoring, reciprocal-rank
@@ -230,7 +230,7 @@ object RankQueries {
        |$legs)""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Registry.of(
 
     // Top-10 BM25 hits for the benchmark query. orderBy+limit plans
     // TakeOrderedAndProject — per-partition top-k then a k-row merge on
@@ -454,7 +454,7 @@ object RankQueries {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Registry.of(
     "ta_bm25" ->
       s"""WITH ${bm25Sql}
          |SELECT doc_id, dl, score FROM bm25

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Registry, Tables}
 import TextOps._
 
 /** Approximate-nearest-neighbor search over the `embeddings` table.
@@ -1037,7 +1037,7 @@ object Similarity {
   val MmrPool = 10
   val MmrSelect = 3
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Registry.of(
 
     // Maximal Marginal Relevance rerank (Carbonell & Goldstein 1998) —
     // the diversity pass between retrieval and the context window:
@@ -3188,7 +3188,7 @@ object Similarity {
     ((head +: rounds) :+ gs).mkString(",\n")
   }
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Registry.of(
     "ss_ivf_occupancy" ->
       s"""WITH RECURSIVE $sqrtAssignCtes,
          |occ AS (SELECT cent_id, count(*)::BIGINT AS n

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Registry, Tables}
 
 /** Mergeable cardinality/frequency SKETCHES with integer-exact,
   * DuckDB-verifiable contracts — the missing piece between the exact
@@ -208,7 +208,7 @@ object SketchQueries {
       .select(col("m"), col("n_set"), col("zcap"), col("est_distinct"),
         col("exact_distinct"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Registry.of(
 
     // The HLL sketch ITSELF: per-register max leading-zero rank over
     // every token occurrence of the corpus. This is the true HLL
@@ -779,7 +779,7 @@ object SketchQueries {
        |  exact_distinct
        |FROM z, ex""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Registry.of(
     "sk_hll_registers" ->
       s"""WITH $wordsSql,
          |$regRhoSql

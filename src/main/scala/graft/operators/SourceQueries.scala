@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Registry, Tables}
 
 /** Source-format coverage beyond parquet: CSV and JSON read paths,
   * oracle-checked end-to-end. Each query round-trips a small dimension
@@ -37,7 +37,7 @@ object SourceQueries {
       "/graft_pqmeta_never_landed")
   private val pqMetaCache = graft.CacheRegistry.newCache()
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Registry.of(
 
     // PARQUET FOOTER METADATA, CROSS-ENGINE: land the documents table
     // as 8 hash-partitioned parquet files once per (session, dir),
@@ -386,8 +386,8 @@ object SourceQueries {
     * row counts from the parquet FOOTERS while the content aggregates
     * re-scan the data — the footer-vs-scan cross-check.
     */
-  def oracleSql: Map[String, String] = staticOracleSql +
-    ("src_parquet_stats" ->
+  def oracleSql: Map[String, String] = Registry.merge(staticOracleSql, Registry.of(
+    "src_parquet_stats" ->
       s"""WITH st AS (
          |  SELECT regexp_extract(file_name, 'part-[0-9]+', 0) AS file,
          |    path_in_schema,
@@ -404,8 +404,8 @@ object SourceQueries {
          |    AS BIGINT) AS min_id,
          |  CAST(max(CASE WHEN path_in_schema = 'doc_id' THEN mx END)
          |    AS BIGINT) AS max_id
-         |FROM st GROUP BY file ORDER BY file""".stripMargin) +
-    ("src_parquet_meta" ->
+         |FROM st GROUP BY file ORDER BY file""".stripMargin,
+    "src_parquet_meta" ->
       s"""WITH rg AS (
          |  -- parquet_metadata() is per COLUMN CHUNK: dedupe to one
          |  -- row per (file, row group) before summing footer claims
@@ -423,9 +423,9 @@ object SourceQueries {
          |    filename=true)
          |  GROUP BY 1)
          |SELECT m.file, m.n_rows, c.sum_chars, c.sum_ids
-         |FROM m JOIN c USING (file) ORDER BY file""".stripMargin)
+         |FROM m JOIN c USING (file) ORDER BY file""".stripMargin))
 
-  private val staticOracleSql: Map[String, String] = Map(
+  private val staticOracleSql: Map[String, String] = Registry.of(
     "src_csv_roundtrip" ->
       "SELECT * FROM nation ORDER BY n_nationkey",
     // The corrupt partition re-derives from the shared md5 subset

@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Registry, Tables}
 
 /** Relational breadth over the driver's TPC-H-ish star schema
   * (SURVEY.md §7.3 step 2): filters/projection pushdown, broadcast +
@@ -35,7 +35,7 @@ object StarQueries {
 
   import Agg.dsum
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Registry.of(
 
     // TPC-H Q1 shape: wide aggregation, predicate pushed to the scan.
     "q1_agg" -> ((s, dir) => {
@@ -51,47 +51,14 @@ object StarQueries {
         .orderBy("l_returnflag", "l_linestatus")
     }),
 
-    // MULTI-LEVEL AGGREGATION surface (round 12): ROLLUP / CUBE /
-    // GROUPING SETS — the OLAP subtotal family the engine lacked.
-    // Spark plans all three as ONE Expand + one hash aggregation (no
-    // per-level rescan), which is exactly the scale story: n grouping
-    // levels cost one shuffle of n× the map-side-combined partials,
-    // never n passes over the corpus. NULL group keys are the rollup
-    // sentinels (n_name/year are non-null in this schema, so output
-    // NULLs unambiguously mean "subtotal level"); the ORDER BY pins
-    // NULLS FIRST explicitly because Spark defaults nulls-first and
-    // DuckDB nulls-last — the ev_bootstrap_ci divergence class.
-    "q_rollup" -> ((s, dir) => {
-      Tables.orders(s, dir)
-        .join(Tables.customer(s, dir),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, dir)),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name"), year(col("o_orderdate")).cast("long").as("yr"),
-          col("o_totalprice"))
-        .rollup(col("n_name"), col("yr"))
-        .agg(count(lit(1)).as("n_orders"),
-          dsum(col("o_totalprice")).as("revenue"))
-        .orderBy(col("n_name").asc_nulls_first, col("yr").asc_nulls_first)
-    }),
-
-    "q_cube" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n_items"),
-          dsum(col("l_quantity")).as("sum_qty"))
-        .orderBy(col("l_returnflag").asc_nulls_first,
-          col("l_linestatus").asc_nulls_first)
-    }),
-
     // GROUPING()/GROUPING_ID disambiguation — the piece that makes
     // rollup output machine-readable when group keys can themselves
-    // be NULL (this schema's keys are non-null, so q_rollup reads
-    // NULLs as subtotals; a nullable key needs the grouping bits to
-    // tell "NULL value at this level" from "this level rolled up").
-    // Spark's grouping_id() bit order = grouping-column order,
-    // mirrored by DuckDB's GROUPING(a, b) — both emit
-    // 2·grouping(a) + grouping(b).
+    // be NULL (a nullable key needs the grouping bits to tell "NULL
+    // value at this level" from "this level rolled up"). Spark's
+    // grouping_id() bit order = grouping-column order, mirrored by
+    // DuckDB's GROUPING(a, b) — both emit 2·grouping(a) + grouping(b).
+    // NULLS FIRST is pinned explicitly: Spark defaults nulls-first,
+    // DuckDB nulls-last.
     "q_grouping_id" -> ((s, dir) => {
       Tables.lineitem(s, dir)
         .rollup(col("l_returnflag"), col("l_linestatus"))
@@ -103,25 +70,6 @@ object StarQueries {
           "g_status", "n_items")
         .orderBy(col("gid"), col("l_returnflag").asc_nulls_first,
           col("l_linestatus").asc_nulls_first)
-    }),
-
-    // explicit sets — per-nation totals, per-year totals, and the
-    // grand total in one pass, WITHOUT the (nation, year) cross level
-    // a rollup/cube would force
-    "q_grouping_sets" -> ((s, dir) => {
-      val base = Tables.orders(s, dir)
-        .join(Tables.customer(s, dir),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, dir)),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name"), year(col("o_orderdate")).cast("long").as("yr"),
-          col("o_totalprice"))
-      base.groupingSets(
-          Seq(Seq(col("n_name")), Seq(col("yr")), Seq.empty[Column]),
-          col("n_name"), col("yr"))
-        .agg(count(lit(1)).as("n_orders"),
-          dsum(col("o_totalprice")).as("revenue"))
-        .orderBy(col("n_name").asc_nulls_first, col("yr").asc_nulls_first)
     }),
 
     // Projection + filter: both must reach the parquet scan
@@ -343,7 +291,7 @@ object StarQueries {
 
   private val dsumSql = OracleSql.dsum _
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Registry.of(
     "q1_agg" ->
       s"""SELECT l_returnflag, l_linestatus,
          |  ${dsumSql("l_quantity")} AS sum_qty,
@@ -359,20 +307,6 @@ object StarQueries {
         |FROM lineitem
         |WHERE l_shipdate < TIMESTAMP '1996-01-01' AND l_discount > 0.05
         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_rollup" ->
-      s"""SELECT n_name, CAST(year(o_orderdate) AS BIGINT) AS yr,
-         |  count(*) AS n_orders, ${dsumSql("o_totalprice")} AS revenue
-         |FROM orders
-         |JOIN customer ON o_custkey = c_custkey
-         |JOIN nation ON c_nationkey = n_nationkey
-         |GROUP BY ROLLUP (n_name, CAST(year(o_orderdate) AS BIGINT))
-         |ORDER BY n_name NULLS FIRST, yr NULLS FIRST""".stripMargin,
-    "q_cube" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         |  count(*) AS n_items, ${dsumSql("l_quantity")} AS sum_qty
-         |FROM lineitem
-         |GROUP BY CUBE (l_returnflag, l_linestatus)
-         |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
     "q_grouping_id" ->
       s"""SELECT l_returnflag, l_linestatus,
          |  CAST(2 * GROUPING(l_returnflag) + GROUPING(l_linestatus)
@@ -384,15 +318,6 @@ object StarQueries {
          |GROUP BY ROLLUP (l_returnflag, l_linestatus)
          |ORDER BY gid, l_returnflag NULLS FIRST,
          |  l_linestatus NULLS FIRST""".stripMargin,
-    "q_grouping_sets" ->
-      s"""SELECT n_name, CAST(year(o_orderdate) AS BIGINT) AS yr,
-         |  count(*) AS n_orders, ${dsumSql("o_totalprice")} AS revenue
-         |FROM orders
-         |JOIN customer ON o_custkey = c_custkey
-         |JOIN nation ON c_nationkey = n_nationkey
-         |GROUP BY GROUPING SETS ((n_name),
-         |  (CAST(year(o_orderdate) AS BIGINT)), ())
-         |ORDER BY n_name NULLS FIRST, yr NULLS FIRST""".stripMargin,
     "q_join_broadcast" ->
       s"""SELECT r_name, count(*) AS n_customers, ${dsumSql("c_acctbal")} AS sum_acctbal
          |FROM customer

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Registry, Tables}
 
 /** Second relational batch: TPC-H-shaped multi-join analytics, explicit
   * grouping sets, exact percentiles, null-handling and string-function
@@ -18,7 +18,7 @@ object StarQueries2 {
 
   import Agg.dsum
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Registry.of(
 
     // Data-quality constraint battery — the Deequ-shaped validation
     // pass a pipeline runs before promoting a batch: named checks
@@ -980,7 +980,7 @@ object StarQueries2 {
 
   private val dsumSql = OracleSql.dsum _
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Registry.of(
     // The grouped fixed-point HLL (sk_hll machinery) — engine-exact,
     // so the previously exempt sketch row now carries a full gate.
     "q_approx_distinct" -> {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Registry, Tables}
 import TextOps._
 
 /** Text-analysis operators for an LLM data pipeline over `documents`:
@@ -183,7 +183,7 @@ object TextAnalysis {
       .orderBy("rk")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Registry.of(
 
     // Language ID: stopword-hit argmax, reported as a confusion matrix
     // against the labeled `lang` column.
@@ -1653,8 +1653,8 @@ object TextAnalysis {
     * from the documents table, only the deflate byte count rides the
     * pin.
     */
-  def oracleSql: Map[String, String] = staticOracleSql +
-    ("ta_compress_ratio" ->
+  def oracleSql: Map[String, String] = Registry.merge(staticOracleSql, Registry.of(
+    "ta_compress_ratio" ->
       s"""WITH sc AS (SELECT * FROM
          |  read_parquet('${deflateSidecar.get()}/*.parquet'))
          |SELECT d.doc_id,
@@ -1664,9 +1664,9 @@ object TextAnalysis {
          |    ELSE round(CAST(sc.n_deflated AS DOUBLE)
          |      / octet_length(encode(d.text)), 4) END AS ratio4
          |FROM documents d JOIN sc ON sc.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin)
+         |ORDER BY d.doc_id""".stripMargin))
 
-  private val staticOracleSql: Map[String, String] = Map(
+  private val staticOracleSql: Map[String, String] = Registry.of(
     "ta_bpe_train" -> {
       val legs = (1 to BpeTrainRounds).map { r =>
         s"SELECT CAST($r AS INT) AS iter, s1, s2, s1 || s2 AS merged, cnt FROM bb$r"

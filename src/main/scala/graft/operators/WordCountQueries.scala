@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Registry, Tables}
 
 /** Reference-parity named queries over `documents.text` (the WordCount
   * input table, FIXTURES.md §2), one per pipeline variant the course
@@ -15,7 +15,7 @@ object WordCountQueries {
 
   private def docs(s: SparkSession, dir: String): DataFrame = Tables.documents(s, dir)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Registry.of(
     // O1-O8 default pipeline: tokenize, count, ASCII asc (Worker.cc:212-214)
     "wordcount" -> ((s, dir) =>
       MapReducePipeline.run(docs(s, dir), MapReduceJob())),
@@ -53,7 +53,7 @@ object WordCountQueries {
   private def bucketSql(wordExpr: String, r: Int): String =
     s"((ascii(substr($wordExpr, 1, 1)) - 65) % $r + $r) % $r"
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Registry.of(
     "wordcount" ->
       """SELECT w AS word, count(*) AS cnt
         |FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Registry, Tables}
 import graft.operators.{Agg, OracleSql, QualityQueries}
 
 /** Oracle-gated streaming surface: each query here runs a REAL
@@ -109,7 +109,7 @@ object StreamingQueries {
     s.table(name)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Registry.of(
 
     // STREAMING TOP-K PER WINDOW — the live leaderboard shape
     // (trending items, noisiest tenants): the STREAM maintains the
@@ -1239,7 +1239,7 @@ object StreamingQueries {
   )
 
   // The batch duals' SQL verbatim — THAT is the contract.
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Registry.of(
     // batch dual of the streaming admission (first-occurrence
     // self-dedup in doc_id order = stream arrival order)
     "st_incremental_dedup" -> graft.operators.Dedup.incrementalAdmissionSql,

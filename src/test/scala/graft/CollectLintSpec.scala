@@ -27,11 +27,10 @@ class CollectLintSpec extends AnyFunSuite {
       "unigram-Viterbi vocab map: model-sized (vocab-capped), never corpus-sized"),
     "operators/QuantileQueries.scala" -> (2,
       "radix-descent histograms: <=2^16 bucket rows per pass by construction"),
-    "Stress.scala" -> (6,
+    "Stress.scala" -> (4,
       "ivfskew fixture verdicts: per-cell census frames (k, k+1, " +
         "k+n_splits, and k+n_splits-n_merges rows — cell counts, " +
-        "never corpus rows); cdcab equality legs: both arms end in " +
-        "limit(50), so each collect is <=50 report rows")
+        "never corpus rows)")
   )
 
   test("every .collect() in main source is allowlisted with its bound") {

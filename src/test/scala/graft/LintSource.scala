@@ -103,8 +103,13 @@ object LintSource {
   /** Main-source .scala files under src/main/scala/graft with raw
     * text, relative path as key.
     */
-  def mainSources(): Map[String, String] = {
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
+  def mainSources(): Map[String, String] = sources("src/main/scala/graft")
+
+  /** Every .scala file under `dir` with raw text, path relative to
+    * `dir` as key.
+    */
+  def sources(dir: String): Map[String, String] = {
+    val root = java.nio.file.Paths.get(dir)
     val out = scala.collection.mutable.Map[String, String]()
     val stream = java.nio.file.Files.walk(root)
     try stream.forEach { p =>

@@ -26,6 +26,19 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"oracles without queries: $orphans")
   }
 
+  test("the registry helper rejects a duplicate key instead of shadowing") {
+    // Map(...) and ++ both keep the last value silently; the registry
+    // literals and the SparkEntry merge must fail loudly instead
+    val lit = intercept[IllegalArgumentException](
+      Registry.of("q_a" -> 1, "q_b" -> 2, "q_a" -> 3))
+    assert(lit.getMessage.contains("q_a") && !lit.getMessage.contains("q_b"))
+    val merged = intercept[IllegalArgumentException](
+      Registry.merge(Map("q_a" -> 1), Map("q_b" -> 2), Map("q_a" -> 3)))
+    assert(merged.getMessage.contains("q_a"))
+    assert(Registry.merge(Map("q_a" -> 1), Map("q_b" -> 2)) ==
+      Map("q_a" -> 1, "q_b" -> 2))
+  }
+
   test("every query has an oracle or a documented exemption") {
     val missing = SparkEntry.queries.keySet
       .diff(SparkEntry.oracleSql.keySet).diff(oracleExempt)
